@@ -115,6 +115,7 @@ from drill_calcite_spark.plans.materialized import (
     _atom_cond,
     _conj,
 )
+from drill_calcite_spark.sqltext import partner, split_depth0, string_mask
 
 # longest-first so the regex alternation can't truncate a suffixed op;
 # STDDEV/VARIANCE are Calcite's aliases for the _SAMP forms
@@ -246,71 +247,6 @@ _DISQUALIFY = re.compile(
     r"\b(?:left|right|full|cross|outer|semi|anti)\s+join\b", re.I)
 
 
-def _split_commas(s: str) -> list[str]:
-    """Split on commas outside parentheses/quotes."""
-    out, depth, start, in_q = [], 0, 0, False
-    for i, ch in enumerate(s):
-        if ch == "'":
-            in_q = not in_q
-        elif not in_q:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                out.append(s[start:i])
-                start = i + 1
-    out.append(s[start:])
-    return [p.strip() for p in out]
-
-
-def _depth0_split(s: str, kw: str) -> list[str]:
-    """Split on the boolean keyword at paren depth 0, outside string
-    literals (word-boundary matched)."""
-    parts, depth, in_q, last = [], 0, False, 0
-    i, n, klen = 0, len(s), len(kw)
-
-    def word(j: int) -> bool:
-        return j < n and (s[j].isalnum() or s[j] == "_")
-
-    while i < n:
-        ch = s[i]
-        if ch == "'":
-            in_q = not in_q
-        elif not in_q:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif (depth == 0 and s[i:i + klen].lower() == kw
-                  and not word(i + klen) and (i == 0 or not word(i - 1))):
-                parts.append(s[last:i])
-                last = i + klen
-                i += klen
-                continue
-        i += 1
-    parts.append(s[last:])
-    return [p.strip() for p in parts]
-
-
-def _wrapped(s: str) -> bool:
-    """Does one outer paren pair enclose the whole string?"""
-    if not (s.startswith("(") and s.endswith(")")):
-        return False
-    depth, in_q = 0, False
-    for i, ch in enumerate(s):
-        if ch == "'":
-            in_q = not in_q
-        elif not in_q:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    return i == len(s) - 1
-    return False
-
-
 def _parse_bool(text: str):
     """Structural parse of the WHERE grammar: a conjunction whose
     conjuncts are simple atoms, parenthesized sub-conjunctions, or
@@ -323,16 +259,16 @@ def _parse_bool(text: str):
     of grammar returns None (the statement falls through untouched)."""
     atoms: list[Atom] = []
     ors: list[list[list[Atom]]] = []
-    for conj in _depth0_split(text, "and"):
+    for conj in split_depth0(text, "and"):
         conj = conj.strip()
-        if _wrapped(conj):
+        if conj.startswith("(") and partner(conj, 0) == len(conj) - 1:
             sub = _parse_bool(conj[1:-1].strip())  # strictly shrinks
             if sub is None:
                 return None
             atoms.extend(sub[0])
             ors.extend(sub[1])
             continue
-        branches = _depth0_split(conj, "or")
+        branches = split_depth0(conj, "or")
         if len(branches) > 1:
             br: list[list[Atom]] = []
             for b in branches:
@@ -408,16 +344,8 @@ def _strip_quals(text: str, quals: set) -> str:
     pat = re.compile(
         r"\b(" + "|".join(sorted(map(re.escape, quals))) + r")\s*\.\s*"
         r"(?=[a-z_])", re.I)
-    spans = []
-    for sm in re.finditer(r"'(?:[^']|'')*'", text):
-        spans.append((sm.start(), sm.end()))
-
-    def repl(m: "re.Match[str]") -> str:
-        if any(s <= m.start() < e for s, e in spans):
-            return m.group(0)
-        return ""
-
-    return pat.sub(repl, text)
+    mask = string_mask(text)
+    return pat.sub(lambda m: m.group(0) if mask[m.start()] else "", text)
 
 
 def _parse_group(clause: str):
@@ -430,7 +358,8 @@ def _parse_group(clause: str):
 
     def cols_of(s: str) -> "list[str] | None":
         out = []
-        for g in _split_commas(s) if s.strip() else []:
+        for g in split_depth0(s, ",") if s.strip() else []:
+            g = g.strip()
             if not re.match(r"^[a-z_]\w*$", g, re.I):
                 return None
             out.append(g)
@@ -445,7 +374,7 @@ def _parse_group(clause: str):
     sm = _GB_SETS.match(clause)
     if sm:
         sets, union = [], []
-        for part in _split_commas(sm.group(1)):
+        for part in split_depth0(sm.group(1), ","):
             pm = _GB_ONE_SET.match(part.strip())
             members = (cols_of(pm.group(1)) if pm
                        else cols_of(part))   # bare col ≡ ((col))
@@ -486,7 +415,8 @@ def _parse(text: str):
     #                             # | ("gfn", col, out)  [grouping(col)]
     #                             # | ("gexpr", ((col, mult), ...), out)
     measures: list[tuple[str, str, str]] = []
-    for item in _split_commas(unq(m.group("select"))):
+    for item in split_depth0(unq(m.group("select")), ","):
+        item = item.strip()
         cm = _CD_ITEM.match(item)
         if cm:
             items.append(("cd", cm.group(1), cm.group(2)))
@@ -544,8 +474,7 @@ def _parse(text: str):
         atoms, oratoms = parsed_w
     havings: list[tuple[str, str, str, float]] = []
     if m.group("having"):
-        for part in re.split(r"\band\b", unq(m.group("having")),
-                             flags=re.I):
+        for part in split_depth0(unq(m.group("having")), "and"):
             part = part.strip()
             gm = _HAVING_GFN.match(part)
             if gm:
@@ -569,7 +498,7 @@ def _parse(text: str):
     out_names = {it[-1] for it in items}
     order: list[tuple[str, bool, "str | None"]] = []
     if m.group("order"):
-        for part in _split_commas(unq(m.group("order"))):
+        for part in split_depth0(unq(m.group("order")), ","):
             om = _ORDER_ITEM.match(part.strip())
             if not om or om.group(1) not in out_names:
                 return None

@@ -40,40 +40,16 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from drill_calcite_spark.sqltext import (
+    depth0_matches, partner, split_depth0, string_mask)
+
 _WORD = re.compile(r"[A-Za-z_][A-Za-z_0-9]*")
 
-# keywords that end an ORDER BY list at paren depth 0
-_ORDER_TERMINATORS = {
-    "limit", "offset", "fetch", "rows", "range", "union", "intersect",
-    "except", "minus", "window", "for",
-}
-
-
-def _string_mask(text: str) -> list[bool]:
-    """mask[i] is True when text[i] sits inside a '...' string literal or
-    a "..." quoted identifier (including the quotes)."""
-    mask = [False] * len(text)
-    i, n = 0, len(text)
-    while i < n:
-        c = text[i]
-        if c in ("'", '"'):
-            quote = c
-            mask[i] = True
-            i += 1
-            while i < n:
-                mask[i] = True
-                if text[i] == quote:
-                    # doubled quote = escaped
-                    if i + 1 < n and text[i + 1] == quote:
-                        mask[i + 1] = True
-                        i += 2
-                        continue
-                    i += 1
-                    break
-                i += 1
-        else:
-            i += 1
-    return mask
+# what ends an ORDER BY list at depth 0: a terminator keyword or the
+# closer of the enclosing group (an OVER spec, a subquery)
+_ORDER_STOP = re.compile(
+    r"\)|\b(?:limit|offset|fetch|rows|range|union|intersect|except|minus"
+    r"|window|for)\b", re.I)
 
 
 # Control char that cannot appear in any SQL the front door accepts —
@@ -601,28 +577,19 @@ def _rewrite_floor_to(text: str) -> str:
         m = head.search(text, pos)
         if not m:
             return text
-        depth, i = 1, m.end()
-        while i < len(text) and depth:
-            if text[i] == "(":
-                depth += 1
-            elif text[i] == ")":
-                depth -= 1
-            i += 1
-        if depth:
-            return text
-        args = text[m.end():i - 1]
-        tm = tail.search(args)
+        close = partner(text, m.end() - 1)
+        tm = close is not None and tail.search(text, m.end(), close)
         if not tm:
             pos = m.end()  # plain numeric floor/ceil — leave untouched
             continue
-        x, unit = args[:tm.start()], tm.group(1).lower()
+        x, unit = text[m.end():tm.start()], tm.group(1).lower()
         tr = f"date_trunc('{unit.upper()}', {x})"
         if m.group(1).lower() in ("ceil", "ceiling"):
             repl = (f"(case when {tr} = {x} then {tr} "
                     f"else {tr} + {_CEIL_STEP[unit]} end)")
         else:
             repl = tr
-        text = text[:m.start()] + repl + text[i:]
+        text = text[:m.start()] + repl + text[close + 1:]
         # rescan from the replacement start: x may itself contain a
         # nested FLOOR/CEIL-to-unit (date_trunc never re-matches)
         pos = m.start()
@@ -675,23 +642,11 @@ def _rewrite_tumble(text: str, lits: "list[str]") -> str:
         m = head.search(text, pos)
         if not m:
             return text
-        depth, i = 1, m.end()
-        args_split = []
-        last = m.end()
-        while i < len(text) and depth:
-            c = text[i]
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-                if depth == 0:
-                    args_split.append(text[last:i])
-            elif c == "," and depth == 1:
-                args_split.append(text[last:i])
-                last = i + 1
-            i += 1
-        if depth:
-            return text
+        close = partner(text, m.end() - 1)
+        if close is None:
+            pos = m.end()
+            continue
+        args_split = split_depth0(text[m.end():close], ",")
         if len(args_split) != 2:
             raise TumbleUnsupported(
                 f"{m.group(1).upper()} takes (datetime, interval); the "
@@ -721,37 +676,17 @@ def _rewrite_tumble(text: str, lits: "list[str]") -> str:
             repl = f"timestamp_micros(unix_micros({start}) + {w})"
         else:
             repl = start
-        text = text[:m.start()] + repl + text[i:]
+        text = text[:m.start()] + repl + text[close + 1:]
         pos = m.start() + len(repl)
 
 
 def _gw_calls(text: str, head: "re.Pattern"):
     """Yield (match, end_index, args) for each ``head``-matched call,
-    splitting top-level comma-separated arguments (the same paren
-    scanner _rewrite_tumble uses)."""
-    pos = 0
-    while True:
-        m = head.search(text, pos)
-        if not m:
-            return
-        depth, i = 1, m.end()
-        args, last = [], m.end()
-        while i < len(text) and depth:
-            c = text[i]
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-                if depth == 0:
-                    args.append(text[last:i])
-            elif c == "," and depth == 1:
-                args.append(text[last:i])
-                last = i + 1
-            i += 1
-        if depth:
-            return
-        yield m, i, args
-        pos = i
+    splitting top-level comma-separated arguments."""
+    for m in head.finditer(text):
+        close = partner(text, m.end() - 1)
+        if close is not None:
+            yield m, close + 1, split_depth0(text[m.end():close], ",")
 
 
 _GW_INTERVAL = re.compile(
@@ -894,21 +829,6 @@ def _rewrite_session(text: str, lits: "list[str]") -> str:
 # otherwise emit the duplicate rows Calcite suppresses).
 
 
-def _scan_call(text: str, start: int) -> "tuple[str, int] | None":
-    """(args, close_index) for the call whose '(' is at start-1... given
-    a match ending just past '('. Returns None on unbalanced text."""
-    depth, i = 1, start
-    while i < len(text) and depth:
-        if text[i] == "(":
-            depth += 1
-        elif text[i] == ")":
-            depth -= 1
-        i += 1
-    if depth:
-        return None
-    return text[start:i - 1], i
-
-
 _IVL_PROD = re.compile(
     rf"([A-Za-z_][\w.]*|\"[\w$]+\")\s*\*\s*interval\s+(-)?\s*"
     rf"'{_LIT_SENTINEL}(\d+){_LIT_SENTINEL}'\s+"
@@ -999,22 +919,17 @@ def _rewrite_period_ctor(text: str, lits: "list[str]") -> str:
     (start, end) pair path instead (queries/funcs.py period ops) —
     this rewrite covers only the bare constructor's rendering
     contract, which is all Calcite itself implements."""
+    pos = 0
     while True:
-        m = _PERIOD_CTOR.search(text)
+        m = _PERIOD_CTOR.search(text, pos)
         if not m:
             return text
-        depth, i, comma = 1, m.end(), None
-        while i < len(text) and depth:
-            c = text[i]
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            elif c == "," and depth == 1:
-                comma = i
-            i += 1
-        if depth or comma is None:
-            return text
+        close = partner(text, m.end() - 1)
+        args = (split_depth0(text[m.end():close], ",")
+                if close is not None else [])
+        if len(args) < 2:
+            pos = m.end()
+            continue
 
         def comp(a: str) -> str:
             im = _PERIOD_IVL.match(a)
@@ -1029,9 +944,9 @@ def _rewrite_period_ctor(text: str, lits: "list[str]") -> str:
             return (f"cast(datediff(cast(({a}) as date), "
                     f"date '1970-01-01') as int)")
 
-        repl = (f"struct({comp(text[m.end():comma].strip())}, "
-                f"{comp(text[comma + 1:i - 1].strip())})")
-        text = text[:m.start()] + repl + text[i:]
+        repl = (f"struct({comp(','.join(args[:-1]).strip())}, "
+                f"{comp(args[-1].strip())})")
+        text = text[:m.start()] + repl + text[close + 1:]
 
 
 _JSON_EXISTS = re.compile(r"\bjson_exists\s*\(", re.I)
@@ -1053,11 +968,9 @@ def _rewrite_json_exists(text: str, lits: "list[str]") -> str:
         m = _JSON_EXISTS.search(text, pos)
         if not m:
             return text
-        scanned = _scan_call(text, m.end())
-        if scanned is None:
-            return text
-        args, close = scanned
-        parts = [p.strip() for p in _split_depth0(args)]
+        close = partner(text, m.end() - 1)
+        parts = ([p.strip() for p in split_depth0(text[m.end():close], ",")]
+                 if close is not None else [])
         if len(parts) != 2:
             pos = m.end()
             continue
@@ -1074,7 +987,7 @@ def _rewrite_json_exists(text: str, lits: "list[str]") -> str:
         lits.append(body)
         newlit = f"'{_LIT_SENTINEL}{len(lits) - 1}{_LIT_SENTINEL}'"
         repl = f"(get_json_object({j}, {newlit}) is not null)"
-        text = text[:m.start()] + repl + text[close:]
+        text = text[:m.start()] + repl + text[close + 1:]
         pos = m.start() + len(repl)
 
 
@@ -1086,11 +999,11 @@ def _rewrite_grouping_funcs(text: str) -> str:
         m = pat.search(text, pos)
         if not m:
             return text
-        scanned = _scan_call(text, m.end())
-        if scanned is None:
-            return text
-        args, close = scanned
-        items = [a.strip() for a in _split_depth0(args)]
+        close = partner(text, m.end() - 1)
+        if close is None:
+            pos = m.end()
+            continue
+        items = [a.strip() for a in split_depth0(text[m.end():close], ",")]
         if m.group(1).lower() == "grouping" and len(items) == 1:
             pos = m.end()  # native single-column grouping
             continue
@@ -1099,24 +1012,8 @@ def _rewrite_grouping_funcs(text: str) -> str:
             f"grouping({a}) * {2 ** (k - 1 - i)}" if k - 1 - i else
             f"grouping({a})"
             for i, a in enumerate(items)) + ")"
-        text = text[:m.start()] + repl + text[close:]
+        text = text[:m.start()] + repl + text[close + 1:]
         pos = m.start() + len(repl)
-
-
-def _depth0_positions(text: str, pattern: "re.Pattern[str]",
-                      mask: "list[bool] | None" = None):
-    """Matches of ``pattern`` at paren depth 0 outside string literals."""
-    mask = _string_mask(text) if mask is None else mask
-    depths, d = [], 0
-    for i, ch in enumerate(text):
-        if not mask[i]:
-            if ch == "(":
-                d += 1
-            elif ch == ")":
-                d -= 1
-        depths.append(d)
-    return [m for m in pattern.finditer(text)
-            if not mask[m.start()] and depths[m.start()] == 0]
 
 
 _HAVING_KW = re.compile(r"\bhaving\b", re.I)
@@ -1136,24 +1033,24 @@ def _rewrite_having_grouping(text: str) -> str:
     grouping() against the GROUP BY natively. Requires every select
     item to be aliased or a bare column (the outer SELECT must be able
     to re-project by name); falls through verbatim otherwise."""
-    having = next(iter(_depth0_positions(text, _HAVING_KW)), None)
+    having = next(iter(depth0_matches(text, _HAVING_KW)), None)
     if having is None:
         return text
-    tail = next((m for m in _depth0_positions(text, _TAIL_KW)
+    tail = next((m for m in depth0_matches(text, _TAIL_KW)
                  if m.start() > having.end()), None)
     cond_end = tail.start() if tail else len(text)
     cond = text[having.end():cond_end].strip()
     if not re.search(r"\bgrouping(_id)?\s*\(", cond, re.I):
         return text
-    sel = next(iter(_depth0_positions(text, _SELECT_KW)), None)
+    sel = next(iter(depth0_matches(text, _SELECT_KW)), None)
     if sel is None or sel.group(1):  # DISTINCT: extra column changes it
         return text
-    frm = next((m for m in _depth0_positions(text, _FROM_KW)
+    frm = next((m for m in depth0_matches(text, _FROM_KW)
                 if m.start() > sel.end()), None)
     if frm is None or frm.start() > having.start():
         return text
     outs = []
-    for it in _split_depth0(text[sel.end():frm.start()]):
+    for it in split_depth0(text[sel.end():frm.start()], ","):
         it = it.strip()
         ma = re.search(r"\s+as\s+(\w+)\s*$", it, re.I)
         if ma:
@@ -1174,6 +1071,7 @@ def _rewrite_having_grouping(text: str) -> str:
 
 
 _ORDER_BY_KW = re.compile(r"\border\s+by\b", re.I)
+_LIMIT_KW = re.compile(r"\blimit\b|\boffset\b", re.I)
 _GROUP_BY_KW = re.compile(r"\bgroup\s+by\b", re.I)
 
 
@@ -1186,30 +1084,29 @@ def _rewrite_orderby_grouping(text: str) -> str:
     (``__ob{i}``), order outside, and re-project the original output
     columns — the sort is a post-aggregate operator, so the transform
     is exact. Same aliasable-select-list contract as the HAVING lift."""
-    ob = next(iter(_depth0_positions(text, _ORDER_BY_KW)), None)
+    ob = next(iter(depth0_matches(text, _ORDER_BY_KW)), None)
     if ob is None:
         return text
-    lim = next((m for m in _depth0_positions(
-        text, re.compile(r"\blimit\b|\boffset\b", re.I))
-        if m.start() > ob.end()), None)
+    lim = next((m for m in depth0_matches(text, _LIMIT_KW)
+                if m.start() > ob.end()), None)
     items_end = lim.start() if lim else len(text)
-    items = _split_depth0(text[ob.end():items_end])
+    items = split_depth0(text[ob.end():items_end], ",")
     if not any(re.search(r"\bgrouping(_id)?\s*\(", it, re.I)
                for it in items):
         return text
-    sel = next(iter(_depth0_positions(text, _SELECT_KW)), None)
+    sel = next(iter(depth0_matches(text, _SELECT_KW)), None)
     if sel is None or sel.group(1):
         return text
-    gb = next((m for m in _depth0_positions(text, _GROUP_BY_KW)
+    gb = next((m for m in depth0_matches(text, _GROUP_BY_KW)
                if m.start() > sel.end() and m.start() < ob.start()), None)
     if gb is None:
         return text
-    frm = next((m for m in _depth0_positions(text, _FROM_KW)
+    frm = next((m for m in depth0_matches(text, _FROM_KW)
                 if m.start() > sel.end()), None)
     if frm is None or frm.start() > gb.start():
         return text
     outs = []
-    for it in _split_depth0(text[sel.end():frm.start()]):
+    for it in split_depth0(text[sel.end():frm.start()], ","):
         it = it.strip()
         ma = re.search(r"\s+as\s+(\w+)\s*$", it, re.I)
         if ma:
@@ -1248,19 +1145,19 @@ def _rewrite_grouping_sets_dedup(text: str) -> str:
         m = pat.search(text, pos)
         if not m:
             return text
-        scanned = _scan_call(text, m.end())
-        if scanned is None:
-            return text
-        args, close = scanned
+        close = partner(text, m.end() - 1)
+        if close is None:
+            pos = m.end()
+            continue
         seen, kept = set(), []
-        for item in _split_depth0(args):
+        for item in split_depth0(text[m.end():close], ","):
             key = re.sub(r"\s+", "", item).lower()
             if key in seen:
                 continue
             seen.add(key)
             kept.append(item.strip())
         repl = "grouping sets (" + ", ".join(kept) + ")"
-        text = text[:m.start()] + repl + text[close:]
+        text = text[:m.start()] + repl + text[close + 1:]
         pos = m.start() + len(repl)
 
 
@@ -1351,22 +1248,6 @@ def _sql_jv(val_expr: str) -> str:
             f"substring(_j, 6, length(_j) - 6))[0]")
 
 
-def _split_top_level(s: str, sep: str) -> list[str]:
-    parts, depth, cur = [], 0, []
-    for ch in s:
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        if ch == sep and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    parts.append("".join(cur))
-    return parts
-
-
 _NULL_CLAUSE = re.compile(r"\s+(null|absent)\s+on\s+null\s*$", re.I)
 _FORMAT_JSON = re.compile(r"\s+format\s+json\s*$", re.I)
 _ORDER_CLAUSE = re.compile(
@@ -1385,22 +1266,16 @@ def _rewrite_json_calls(text: str, lits: "list[str]") -> str:
 
     def one(m: "re.Match[str]") -> "str | None":
         fn = m.group(1).lower()
-        depth, i = 1, m.end()
-        while i < len(text) and depth:
-            if text[i] == "(":
-                depth += 1
-            elif text[i] == ")":
-                depth -= 1
-            i += 1
-        if depth:
+        close = partner(text, m.end() - 1)
+        if close is None:
             return None
-        args, close = text[m.end():i - 1], i
+        args = text[m.end():close]
         if _JSON_CALL.search(args):
             return None  # not innermost — recurse later
         if fn == "json_object":
             pairs = []
-            for part in _split_top_level(args, ","):
-                k_txt, v_txt = _split_top_level(part, ":")
+            for part in split_depth0(args, ","):
+                k_txt, v_txt = split_depth0(part, ":")
                 lm = _LIT_REF.match(k_txt)
                 if not lm:
                     raise ValueError(
@@ -1424,7 +1299,7 @@ def _rewrite_json_calls(text: str, lits: "list[str]") -> str:
             absent = bool(nc and nc.group(1).lower() == "absent")
             if nc:
                 a = a[:nc.start()]
-            k_txt, v_txt = _split_top_level(a, ":")
+            k_txt, v_txt = split_depth0(a, ":")
             k_txt, v_txt = k_txt.strip(), v_txt.strip()
             guard = (f"({k_txt}) IS NOT NULL AND ({v_txt}) IS NOT NULL"
                      if absent else f"({k_txt}) IS NOT NULL")
@@ -1474,7 +1349,7 @@ def _rewrite_json_calls(text: str, lits: "list[str]") -> str:
             repl = (f"(({emit_lit('[')} || concat_ws({emit_lit(',')}, "
                     f"transform({entries}, _e -> _e.v))) "
                     f"|| {emit_lit(']')})")
-        return text[:m.start()] + repl + text[close:]
+        return text[:m.start()] + repl + text[close + 1:]
 
     guard_iters = 0
     while True:
@@ -1500,26 +1375,11 @@ def _jq(key: str) -> str:
 def _rewrite_listagg(text: str) -> str:
     """listagg(expr) → listagg(expr, ',') when the call has exactly one
     top-level argument (Calcite's default comma separator)."""
-    mask = _string_mask(text)
     out, consumed = [], 0
     for m in re.finditer(r"\blistagg\s*\(", text, re.I):
-        if mask[m.start()]:
+        close = partner(text, m.end() - 1)
+        if close is None or len(split_depth0(text[m.end():close], ",")) > 1:
             continue
-        # scan to the matching close paren, watching top-level commas
-        depth, i, has_comma = 1, m.end(), False
-        while i < len(text) and depth:
-            if not mask[i]:
-                c = text[i]
-                if c == "(":
-                    depth += 1
-                elif c == ")":
-                    depth -= 1
-                elif c == "," and depth == 1:
-                    has_comma = True
-            i += 1
-        if depth or has_comma:
-            continue
-        close = i - 1
         out.append(text[consumed:close])
         out.append(", ','")
         consumed = close
@@ -1527,64 +1387,36 @@ def _rewrite_listagg(text: str) -> str:
     return "".join(out)
 
 
-def _order_items(text: str, mask: list[bool], start: int):
-    """Yield (item_start, item_end) spans of the ORDER BY list starting
-    at ``start`` (just past 'by'), ending at a terminator keyword, an
-    unbalanced ')', or end of text."""
-    i, n = start, len(text)
-    depth = 0
-    item_start = None
-    items = []
-    while i < n:
-        if mask[i]:
-            i += 1
-            continue
-        c = text[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            if depth == 0:
-                break
-            depth -= 1
-        elif c == "," and depth == 0:
-            items.append((item_start, i))
-            item_start = None
-        elif depth == 0 and c.isalpha():
-            w = _word_at(text, i)
-            if w in _ORDER_TERMINATORS:
-                break
-            if item_start is None:
-                item_start = i
-            i += len(w)
-            continue
-        elif item_start is None and not c.isspace():
-            item_start = i
-        i += 1
-    if item_start is not None:
-        items.append((item_start, i))
-    return [(a, b) for a, b in items if a is not None]
+def _order_items(text: str, start: int) -> "list[tuple[int, int]]":
+    """(item_start, item_end) spans of the ORDER BY list starting at
+    ``start`` (just past 'by'), ending at a terminator keyword, an
+    unbalanced ')', or end of text; surrounding whitespace trimmed."""
+    body = text[start:]
+    stop = next(iter(depth0_matches(body, _ORDER_STOP)), None)
+    spans, pos = [], start
+    for item in split_depth0(body[:stop.start() if stop else None], ","):
+        if item.strip():
+            spans.append((pos + len(item) - len(item.lstrip()),
+                          pos + len(item.rstrip())))
+        pos += len(item) + 1
+    return spans
 
 
 def _rewrite_nulls_high(text: str) -> str:
     """Append NULLS LAST (ASC) / NULLS FIRST (DESC) to every ORDER BY
     item lacking an explicit NULLS clause — Calcite's HIGH default."""
-    mask = _string_mask(text)
+    mask = string_mask(text)
     edits: list[tuple[int, str]] = []
     for m in re.finditer(r"\border\s+by\b", text, re.I):
         if mask[m.start()]:
             continue
-        for a, b in _order_items(text, mask, m.end()):
-            item = text[a:b]
-            words = [w.lower() for w in _WORD.findall(item)]
+        for a, b in _order_items(text, m.end()):
+            words = [w.lower() for w in _WORD.findall(text[a:b])]
             if "nulls" in words:
                 continue
             direction = "desc" if words and words[-1] == "desc" else "asc"
             suffix = " NULLS FIRST" if direction == "desc" else " NULLS LAST"
-            # trim trailing whitespace inside the span
-            end = b
-            while end > a and text[end - 1].isspace():
-                end -= 1
-            edits.append((end, suffix))
+            edits.append((b, suffix))
     for pos, suffix in sorted(edits, reverse=True):
         text = text[:pos] + suffix + text[pos:]
     return text
@@ -1670,22 +1502,11 @@ def _rewrite_dquote_idents(text: str) -> str:
 def _wrap_call(text: str, name: str, new_open: str, extra_close: str) -> str:
     """Replace ``name(args)`` with ``new_open args extra_close )`` keeping
     args balanced (e.g. fusion(x) → flatten(collect_list(x)))."""
-    mask = _string_mask(text)
     out, consumed = [], 0
     for m in re.finditer(rf"\b{name}\s*\(", text, re.I):
-        if mask[m.start()]:
+        close = partner(text, m.end() - 1)
+        if close is None:
             continue
-        depth, i = 1, m.end()
-        while i < len(text) and depth:
-            if not mask[i]:
-                if text[i] == "(":
-                    depth += 1
-                elif text[i] == ")":
-                    depth -= 1
-            i += 1
-        if depth:
-            continue
-        close = i - 1
         out.append(text[consumed:m.start()])
         out.append(new_open)
         out.append(text[m.end():close])
@@ -1745,16 +1566,8 @@ def _quant_lhs_span(text: str, op_start: int) -> "tuple[int, int] | None":
     if j < 0:
         return None
     if text[j] == ")":
-        depth, k = 0, j
-        while k >= 0:
-            if text[k] == ")":
-                depth += 1
-            elif text[k] == "(":
-                depth -= 1
-                if depth == 0:
-                    break
-            k -= 1
-        if depth != 0:
+        k = partner(text, j)
+        if k is None:
             return None
         # include a directly-attached function name, if any
         i = k - 1
@@ -1805,7 +1618,7 @@ def _subquery_has_outer_refs(sub: str) -> bool:
     to Spark. Bare-column correlation is not detectable without a
     catalog and stays out of scope (as in Calcite's own
     RexSubQuery-decorrelation preconditions)."""
-    mask = _string_mask(sub)
+    mask = string_mask(sub)
     defined: "set[str]" = set()
     for m in _FROM_ITEM.finditer(sub):
         if mask[m.start()]:
@@ -1849,7 +1662,7 @@ def _rewrite_projected_in_subquery(text: str) -> str:
     anything else → filter context, leave."""
     pos = 0
     while True:
-        mask = _string_mask(text)
+        mask = string_mask(text)
         m = None
         for cand in _PROJ_IN_PAT.finditer(text, pos):
             if not mask[cand.start()]:
@@ -1863,15 +1676,11 @@ def _rewrite_projected_in_subquery(text: str) -> str:
             continue
         lhs = text[span[0]:span[1]]
         neg = bool(m.group(1))
-        depth, i = 1, m.end()
-        while i < len(text) and depth:
-            if not mask[i]:
-                if text[i] == "(":
-                    depth += 1
-                elif text[i] == ")":
-                    depth -= 1
-            i += 1
-        sub = text[m.end():i - 1]
+        close = partner(text, text.index("(", m.start()))
+        if close is None:
+            pos = m.end()
+            continue
+        sub, i = text[m.end():close], close + 1
         # rewrite in SELECT (value) context, and in ANY context when the
         # predicate's UNKNOWN-ness is OBSERVED by a following IS [NOT]
         # NULL (the IS UNKNOWN spelling, already rewritten above) —
@@ -1924,29 +1733,23 @@ def _rewrite_row_in_nulllist(text: str) -> str:
     pat = re.compile(r"\b(not\s+)?in\s*\(", re.I)
     pos = 0
     while True:
-        mask = _string_mask(text)
-        m = next((c for c in pat.finditer(text, pos)
-                  if not mask[c.start()]), None)
+        m = pat.search(text, pos)
         if m is None:
             return text
-        depth, i = 1, m.end()
-        while i < len(text) and depth:
-            if not mask[i]:
-                if text[i] == "(":
-                    depth += 1
-                elif text[i] == ")":
-                    depth -= 1
-            i += 1
-        body = text[m.end():i - 1]
+        close = partner(text, m.end() - 1)
+        if close is None:
+            pos = m.end()
+            continue
+        body, i = text[m.end():close], close + 1
         if re.match(r"\s*(select|with|values)\b", body, re.I):
             pos = m.end()
             continue
-        items = [it.strip() for it in _split_depth0(body)]
+        items = [it.strip() for it in split_depth0(body, ",")]
         if not items or not all(it.startswith("(") and it.endswith(")")
                                 for it in items):
             pos = m.end()
             continue
-        tuples = [[v.strip() for v in _split_depth0(it[1:-1])]
+        tuples = [[v.strip() for v in split_depth0(it[1:-1], ",")]
                   for it in items]
         if not any(re.fullmatch(r"null", v, re.I)
                    for tup in tuples for v in tup):
@@ -1956,20 +1759,8 @@ def _rewrite_row_in_nulllist(text: str) -> str:
         j = m.start() - 1
         while j >= 0 and text[j].isspace():
             j -= 1
-        if j < 0 or text[j] != ")":
-            pos = m.end()
-            continue
-        d2, k = 0, j
-        while k >= 0:
-            if not mask[k]:
-                if text[k] == ")":
-                    d2 += 1
-                elif text[k] == "(":
-                    d2 -= 1
-                    if d2 == 0:
-                        break
-            k -= 1
-        if k < 0:
+        k = partner(text, j) if j >= 0 and text[j] == ")" else None
+        if k is None:
             pos = m.end()
             continue
         # the paren group must be a ROW CONSTRUCTOR, not a call's
@@ -1988,7 +1779,7 @@ def _rewrite_row_in_nulllist(text: str) -> str:
                                  "by", "row"):
             pos = m.end()
             continue
-        lhs = [v.strip() for v in _split_depth0(text[k + 1:j])]
+        lhs = [v.strip() for v in split_depth0(text[k + 1:j], ",")]
         if len(lhs) < 2 or any(len(t) != len(lhs) for t in tuples):
             pos = m.end()
             continue
@@ -2007,33 +1798,24 @@ def _rewrite_quantified(text: str) -> str:
     NOT IN, ordered ops → Calcite's min/max + count-guard expansion
     (rules/SubQueryRemoveRule.java), preserving three-valued logic.
     The quidem some.iq corpus (NULL-element edge cases) is the check."""
-    mask = _string_mask(text)
     pos = 0
     while True:
         m = _QUANT_PAT.search(text, pos)
         if not m:
             return text
-        if mask[m.start()]:
-            pos = m.end()
-            continue
+        close = partner(text, m.end() - 1)
         span = _quant_lhs_span(text, m.start())
-        if span is None:
+        if close is None or span is None:
             pos = m.end()
             continue
         lhs = text[span[0]:span[1]]
         op, quant = m.group(1), m.group(2).lower()
-        depth, i = 1, m.end()
-        while i < len(text) and depth:
-            if text[i] == "(":
-                depth += 1
-            elif text[i] == ")":
-                depth -= 1
-            i += 1
-        sub = text[m.end():i - 1]
+        sub, i = text[m.end():close], close + 1
         if not re.match(r"\s*(select|with|values)\b", sub, re.I):
             # quantified over a VALUE LIST: x > ALL (a, b) — lift the
             # list into a VALUES subquery and reuse the same expansion
-            items = ", ".join(f"({v.strip()})" for v in sub.split(","))
+            items = ", ".join(f"({v.strip()})"
+                              for v in split_depth0(sub, ","))
             sub = f"SELECT __v FROM (VALUES {items}) AS __t(__v)"
         quant_kind = "some" if quant in ("any", "some") else "all"
         if op == "=" and quant_kind == "some":
@@ -2055,7 +1837,6 @@ def _rewrite_quantified(text: str) -> str:
                 "three-valued-logic-preserving rewrite here; use the "
                 "builder API's quantified forms")
         text = text[:span[0]] + repl + text[i:]
-        mask = _string_mask(text)
         pos = 0
 
 
@@ -2066,27 +1847,22 @@ def _rewrite_initcap(text: str) -> str:
     initcap splits on whitespace only. Per-character transform with a
     previous-char lookback — pure column algebra, no UDF."""
     pat = re.compile(r"\binitcap\s*\(", re.I)
+    pos = 0
     while True:
-        mask = _string_mask(text)
-        m = next((mm for mm in pat.finditer(text)
-                  if not mask[mm.start()]), None)
+        m = pat.search(text, pos)
         if m is None:
             return text
-        depth, i = 1, m.end()
-        while i < len(text) and depth:
-            if not mask[i]:
-                if text[i] == "(":
-                    depth += 1
-                elif text[i] == ")":
-                    depth -= 1
-            i += 1
-        arg = text[m.end():i - 1]
+        close = partner(text, m.end() - 1)
+        if close is None:
+            pos = m.end()
+            continue
+        arg = text[m.end():close]
         repl = (
             f"array_join(transform(split({arg}, ''), (__c, __i) -> "
             f"CASE WHEN __i = 0 OR NOT substr({arg}, __i, 1) "
             f"rlike '[A-Za-z0-9]' THEN ucase(__c) ELSE lcase(__c) END), "
             f"'')")
-        text = text[:m.start()] + repl + text[i:]
+        text = text[:m.start()] + repl + text[close + 1:]
 
 
 def _rewrite_multiarg_count(text: str) -> str:
@@ -2094,32 +1870,15 @@ def _rewrite_multiarg_count(text: str) -> str:
     argument is non-null (SqlStdOperatorTable COUNT is multi-arg;
     agg.iq's "composite count" cases). Spark's COUNT takes one argument
     unless DISTINCT — rewrite to count(CASE WHEN ... THEN 1 END)."""
-    mask = _string_mask(text)
     out, consumed = [], 0
     for m in re.finditer(r"\bcount\s*\(", text, re.I):
-        if mask[m.start()]:
+        close = partner(text, m.end() - 1)
+        if close is None:
             continue
-        depth, i = 1, m.end()
-        commas = []
-        while i < len(text) and depth:
-            if not mask[i]:
-                c = text[i]
-                if c == "(":
-                    depth += 1
-                elif c == ")":
-                    depth -= 1
-                elif c == "," and depth == 1:
-                    commas.append(i)
-            i += 1
-        if depth or not commas:
-            continue
-        close = i - 1
         body = text[m.end():close]
-        if re.match(r"\s*distinct\b", body, re.I):
+        args = [a.strip() for a in split_depth0(body, ",")]
+        if len(args) < 2 or re.match(r"\s*distinct\b", body, re.I):
             continue  # count(DISTINCT a, b) is native
-        bounds = [m.end()] + [c + 1 for c in commas] + [close + 1]
-        args = [text[bounds[k]:bounds[k + 1] - 1].strip()
-                for k in range(len(bounds) - 1)]
         cond = " AND ".join(f"({a}) IS NOT NULL" for a in args)
         out.append(text[consumed:m.start()])
         out.append(f"count(CASE WHEN {cond} THEN 1 END)")
@@ -2131,21 +1890,17 @@ def _rewrite_multiarg_count(text: str) -> str:
 def _rewrite_array_literals(text: str) -> str:
     """ARRAY[a, b] / MULTISET[a, b] → array(a, b), innermost first."""
     pat = re.compile(r"\b(array|multiset)\s*\[", re.I)
+    pos = 0
     while True:
-        m = pat.search(text)
+        m = pat.search(text, pos)
         if not m:
             return text
-        depth, i = 1, m.end()
-        while i < len(text) and depth:
-            if text[i] == "[":
-                depth += 1
-            elif text[i] == "]":
-                depth -= 1
-            i += 1
-        if depth:
-            return text  # unbalanced — leave untouched
-        body = text[m.end():i - 1]
-        text = text[:m.start()] + "array(" + body + ")" + text[i:]
+        close = partner(text, m.end() - 1)
+        if close is None:
+            pos = m.end()  # unbalanced — leave untouched
+            continue
+        body = text[m.end():close]
+        text = text[:m.start()] + "array(" + body + ")" + text[close + 1:]
 
 
 _MSET_OP = re.compile(
@@ -2159,15 +1914,8 @@ def _operand_back(text: str, end: int) -> int:
     while i > 0 and text[i - 1].isspace():
         i -= 1
     if i > 0 and text[i - 1] == ")":
-        depth = 0
-        while i > 0:
-            i -= 1
-            if text[i] == ")":
-                depth += 1
-            elif text[i] == "(":
-                depth -= 1
-                if depth == 0:
-                    break
+        open_at = partner(text, i - 1)
+        i = 0 if open_at is None else open_at
         # include an attached function name
         j = i
         while j > 0 and (text[j - 1].isalnum() or text[j - 1] in "_."):
@@ -2190,15 +1938,8 @@ def _operand_fwd(text: str, start: int) -> int:
     while j < len(text) and text[j].isspace():
         j += 1
     if j < len(text) and text[j] == "(":
-        depth = 0
-        while j < len(text):
-            if text[j] == "(":
-                depth += 1
-            elif text[j] == ")":
-                depth -= 1
-                if depth == 0:
-                    return j + 1
-            j += 1
+        close = partner(text, j)
+        return len(text) if close is None else close + 1
     return j
 
 
@@ -2245,24 +1986,6 @@ _VALUES_ALIAS = re.compile(
 _CALL_IN_CELL = re.compile(r"[A-Za-z_]\w*\s*\(")
 
 
-def _split_depth0(s: str) -> "list[str]":
-    """Split on commas at paren depth 0, respecting string literals."""
-    mask = _string_mask(s)
-    parts, depth, start = [], 0, 0
-    for i, ch in enumerate(s):
-        if mask[i]:
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append(s[start:i])
-            start = i + 1
-    parts.append(s[start:])
-    return parts
-
-
 def _rewrite_values_exprs(text: str) -> str:
     """Calcite evaluates arbitrary expressions inside a VALUES inline
     table; Spark's inline tables accept only foldable literals
@@ -2271,31 +1994,19 @@ def _rewrite_values_exprs(text: str) -> str:
     rejected). Rewrite ``(VALUES (e1, e2), …) AS t(c1, c2)`` whose rows
     contain function calls into the equivalent
     ``(SELECT e1 AS c1, e2 AS c2 UNION ALL …) AS t``."""
-    mask = _string_mask(text)
-    matches = [m for m in _VALUES_OPEN.finditer(text) if not mask[m.start()]]
-    for m in reversed(matches):
-        depth, end = 0, None
-        for j in range(m.start(), len(text)):
-            if mask[j]:
-                continue
-            if text[j] == "(":
-                depth += 1
-            elif text[j] == ")":
-                depth -= 1
-                if depth == 0:
-                    end = j
-                    break
+    for m in reversed(list(_VALUES_OPEN.finditer(text))):
+        end = partner(text, m.start())
         if end is None:
             continue
         alias = _VALUES_ALIAS.match(text, end + 1)
         if not alias:
             continue
-        rows = [r.strip() for r in _split_depth0(text[m.end():end])]
+        rows = [r.strip() for r in split_depth0(text[m.end():end], ",")]
         cols = [c.strip() for c in alias.group(2).split(",")]
         cells_by_row = []
         for r in rows:
             body = r[1:-1] if r.startswith("(") and r.endswith(")") else r
-            cells_by_row.append([c.strip() for c in _split_depth0(body)])
+            cells_by_row.append([c.strip() for c in split_depth0(body, ",")])
         if not any(_CALL_IN_CELL.search(c)
                    for row in cells_by_row for c in row):
             continue  # plain literal rows: Spark handles them natively
@@ -2326,37 +2037,29 @@ def _rewrite_unordered_windows(text: str) -> str:
     deptno)`` (:703) — i.e. every row ranks behind all its peers;
     ``count(*)`` over the same partition reproduces that exactly (and
     needs no ORDER BY)."""
-    mask = _string_mask(text)
     out, consumed = [], 0
     for m in _OVER_RE.finditer(text):
-        if mask[m.start()] or m.start() < consumed:
+        close = partner(text, m.end() - 1)
+        if close is None or m.start() < consumed:
             continue
         # ranking function call directly before OVER?
         head = text[:m.start()].rstrip()
         fn = re.search(r"([a-z_]+)\s*\(([^()]*)\)$", head, re.I)
         if not fn or fn.group(1).lower() not in _RANKING_FNS:
             continue
-        depth, j = 1, m.end()
-        while j < len(text) and depth:
-            if not mask[j]:
-                if text[j] == "(":
-                    depth += 1
-                elif text[j] == ")":
-                    depth -= 1
-            j += 1
-        spec = text[m.end():j - 1]
+        spec = text[m.end():close]
         if re.search(r"\border\s+by\b", spec, re.I):
             continue
         name = fn.group(1).lower()
         out.append(text[consumed:fn.start()])
         if name in ("rank", "dense_rank"):
             out.append("count(*)")
-            out.append(text[fn.end():j - 1])
+            out.append(text[fn.end():close])
         else:
             out.append(f"{name}({fn.group(2)})")
-            out.append(text[fn.end():j - 1])
+            out.append(text[fn.end():close])
             out.append(" order by 1" if spec.strip() else "order by 1")
-        consumed = j - 1
+        consumed = close
     out.append(text[consumed:])
     return "".join(out)
 
@@ -2366,29 +2069,17 @@ def _rewrite_unary_minmax(text: str) -> str:
     redshift.iq:859); Spark demands at least two arguments — unwrap the
     single-argument form."""
     pat = re.compile(r"\b(greatest|least)\s*\(", re.I)
+    pos = 0
     while True:
-        mask = _string_mask(text)
-        m = next((mm for mm in pat.finditer(text) if not mask[mm.start()]),
-                 None)
+        m = pat.search(text, pos)
         if m is None:
             return text
-        depth, j, comma = 1, m.end(), False
-        while j < len(text) and depth:
-            if not mask[j]:
-                if text[j] == "(":
-                    depth += 1
-                elif text[j] == ")":
-                    depth -= 1
-                elif text[j] == "," and depth == 1:
-                    comma = True
-            j += 1
-        if comma:
-            # ≥ 2 args: leave it (rescan from the end of this call)
-            head, tail = text[:j], text[j:]
-            tail = _rewrite_unary_minmax(tail)
-            return head + tail
-        text = (text[:m.start()] + "(" + text[m.end():j - 1].strip() + ")"
-                + text[j:])
+        close = partner(text, m.end() - 1)
+        if close is None or len(split_depth0(text[m.end():close], ",")) > 1:
+            pos = m.end()  # ≥ 2 args: leave it
+            continue
+        text = (text[:m.start()] + "(" + text[m.end():close].strip() + ")"
+                + text[close + 1:])
 
 
 _SEEDED_RAND = re.compile(
@@ -2519,28 +2210,17 @@ def rewrite(text: str, *, schema_views: "dict[str, str] | None" = None,
         # the STATEMENT-level ORDER BY is the depth-0 occurrence outside
         # string literals — `order by` inside an OVER clause or a
         # subquery sits at depth ≥ 1 and must not be touched
-        mask = _string_mask(text)
-        depths, d = [], 0
-        for i, ch in enumerate(text):
-            if not mask[i]:
-                if ch == "(":
-                    d += 1
-                elif ch == ")":
-                    d -= 1
-            depths.append(d)
-        obs = [m for m in re.finditer(r"\border\s+by\s+", text, re.I)
-               if not mask[m.start()] and depths[m.start()] == 0
-               and m.start() > sd.end()]
+        obs = [m for m in depth0_matches(text, r"(?i)\border\s+by\s+")
+               if m.start() > sd.end()]
         if obs:
             ob = obs[-1]
             # aliases live in the SELECT list: between DISTINCT and the
             # statement-level FROM
-            fr = next((m for m in re.finditer(r"\bfrom\b", text, re.I)
-                       if not mask[m.start()] and depths[m.start()] == 0
-                       and m.start() > sd.end()), None)
+            fr = next((m for m in depth0_matches(text, _FROM_KW)
+                       if m.start() > sd.end()), None)
             sel = text[sd.end():fr.start() if fr else ob.start()]
             parts = []
-            for item in _split_depth0(text[ob.end():]):
+            for item in split_depth0(text[ob.end():], ","):
                 m_dir = re.match(r"^(.*?)(\s+(?:asc|desc))?\s*$", item,
                                  re.I | re.S)
                 expr = m_dir.group(1).strip()
@@ -2646,15 +2326,7 @@ def rewrite(text: str, *, schema_views: "dict[str, str] | None" = None,
     # as the lambda-based multiset rewrites — a single-row VALUES of one
     # expression is SELECT-without-FROM
     if re.match(r"\s*values\b", text, re.I) and "->" in text:
-        depth, top_comma = 0, False
-        for ch in text:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                top_comma = True
-        if not top_comma:
+        if len(split_depth0(text, ",")) == 1:
             text = re.sub(r"^\s*values\b", "select", text, flags=re.I)
     return _unshield_literals(text, _lits)
 
@@ -2694,7 +2366,7 @@ def calcite_sql(spark: SparkSession, text: str, *,
     # resolve THIS statement under spark.sql.caseSensitive=true — the
     # rewrite turns the quotes into backticks, which then resolve
     # byte-exactly like Calcite's DQIDs.
-    mask = _string_mask(text)
+    mask = string_mask(text)
     dq = set()
     for m in re.finditer(r'"((?:[^"]|"")+)"', text):
         if mask[m.start()] and (m.start() == 0 or not mask[m.start() - 1]):

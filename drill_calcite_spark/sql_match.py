@@ -46,6 +46,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
+from drill_calcite_spark.sqltext import depth0_matches, partner, split_depth0
+
 
 class MatchRecognizeUnsupported(Exception):
     pass
@@ -58,19 +60,6 @@ def has_match_recognize(text: str) -> bool:
     return bool(_MR_HEAD.search(text))
 
 
-def _balanced_span(text: str, open_at: int) -> int:
-    """End index (exclusive) of the paren group opening at ``open_at``."""
-    depth = 0
-    for i in range(open_at, len(text)):
-        if text[i] == "(":
-            depth += 1
-        elif text[i] == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-    raise MatchRecognizeUnsupported("unbalanced parens in MATCH_RECOGNIZE")
-
-
 _CLAUSE = re.compile(
     r"\b(partition\s+by|order\s+by|measures|one\s+row\s+per\s+match|"
     r"all\s+rows\s+per\s+match|after\s+match|pattern|subset|within|define)\b",
@@ -79,47 +68,14 @@ _CLAUSE = re.compile(
 
 def _split_clauses(body: str) -> "list[tuple[str, str]]":
     """Split the MR body into (clause_keyword, clause_text) pairs at
-    paren depth 0."""
-    marks = []
-    depth = 0
-    i = 0
-    while i < len(body):
-        c = body[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0:
-            m = _CLAUSE.match(body, i)
-            if m:
-                marks.append((m.start(), m.end(),
-                              re.sub(r"\s+", " ", m.group(1).lower())))
-                i = m.end()
-                continue
-        i += 1
+    depth 0."""
+    marks = [(m.start(), m.end(), re.sub(r"\s+", " ", m.group(1).lower()))
+             for m in depth0_matches(body, _CLAUSE)]
     out = []
     for k, (s, e, kw) in enumerate(marks):
         nxt = marks[k + 1][0] if k + 1 < len(marks) else len(body)
         out.append((kw, body[e:nxt].strip()))
     return out
-
-
-def _split_top(text: str, sep: str = ",") -> "list[str]":
-    parts, depth, cur = [], 0, []
-    for c in text:
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        if c == sep and depth == 0:
-            parts.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(c)
-    tail = "".join(cur).strip()
-    if tail:
-        parts.append(tail)
-    return parts
 
 
 # ---------------------------------------------------------------- DEFINE
@@ -243,42 +199,6 @@ def _compile_define(cond: str, columns: "set[str]"):
     return fn
 
 
-def _split_kw(e: str, kw: str) -> "list[str]":
-    """Split at depth-0 occurrences of the word ``kw``."""
-    pat = re.compile(rf"\b{kw}\b", re.I)
-    parts, depth, cur, i = [], 0, [], 0
-    while i < len(e):
-        if e[i] == "(":
-            depth += 1
-        elif e[i] == ")":
-            depth -= 1
-        m = pat.match(e, i) if depth == 0 else None
-        if m:
-            parts.append("".join(cur))
-            cur = []
-            i = m.end()
-            continue
-        cur.append(e[i])
-        i += 1
-    parts.append("".join(cur))
-    return [p.strip() for p in parts]
-
-
-def _outer_parens(e: str) -> bool:
-    """True when ``e`` is one fully-parenthesized group."""
-    if not (e.startswith("(") and e.endswith(")")):
-        return False
-    depth = 0
-    for i, ch in enumerate(e):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return i == len(e) - 1
-    return False
-
-
 def _bool_to_pandas(e: str) -> str:
     """AND/OR → & / | with every operand parenthesized (& and | bind
     TIGHTER than comparisons in Python, the classic pandas trap);
@@ -286,10 +206,10 @@ def _bool_to_pandas(e: str) -> str:
     parens — ``(NOT (c <= 4)) AND ...`` — translate too (r10; the MR
     fuzzer surfaced the gap)."""
     e = e.strip()
-    ors = _split_kw(e, "or")
+    ors = split_depth0(e, "or")
     if len(ors) > 1:
         return " | ".join(f"({_bool_to_pandas(p)})" for p in ors)
-    ands = _split_kw(e, "and")
+    ands = split_depth0(e, "and")
     if len(ands) > 1:
         return " & ".join(f"({_bool_to_pandas(p)})" for p in ands)
     # NOT binds looser than comparison in SQL: NOT c = 3 is NOT (c = 3),
@@ -297,7 +217,7 @@ def _bool_to_pandas(e: str) -> str:
     m = re.match(r"^\s*not\b(.*)$", e, re.I | re.S)
     if m:
         return _negate(m.group(1).strip())
-    if _outer_parens(e):
+    if e.startswith("(") and partner(e, 0) == len(e) - 1:
         return f"({_bool_to_pandas(e[1:-1].strip())})"
     return e
 
@@ -314,20 +234,20 @@ def _negate(e: str) -> str:
     first row). A pandas ``~`` would instead turn the null comparison's
     False into True and admit rows SQL rejects."""
     e = e.strip()
-    ors = _split_kw(e, "or")
+    ors = split_depth0(e, "or")
     if len(ors) > 1:
         return " & ".join(f"({_negate(p)})" for p in ors)
-    ands = _split_kw(e, "and")
+    ands = split_depth0(e, "and")
     if len(ands) > 1:
         return " | ".join(f"({_negate(p)})" for p in ands)
     m = re.match(r"^\s*not\b(.*)$", e, re.I | re.S)
     if m:  # double negation
         return _bool_to_pandas(m.group(1).strip())
-    if _outer_parens(e):
+    if e.startswith("(") and partner(e, 0) == len(e) - 1:
         return f"({_negate(e[1:-1].strip())})"
-    for mt in _CMP_TOK.finditer(e):
-        if e[:mt.start()].count("(") == e[:mt.start()].count(")"):
-            return e[:mt.start()] + _CMP_FLIP[mt.group(0)] + e[mt.end():]
+    mt = next(iter(depth0_matches(e, _CMP_TOK)), None)
+    if mt:
+        return e[:mt.start()] + _CMP_FLIP[mt.group(0)] + e[mt.end():]
     raise MatchRecognizeUnsupported(
         f"cannot negate DEFINE term: {e!r}")
 
@@ -756,9 +676,12 @@ def translate_match_recognize(spark: SparkSession, text: str) -> DataFrame:
     from drill_calcite_spark.sql import rewrite
 
     head = _MR_HEAD.search(text)
-    open_at = text.index("(", head.start())
-    end = _balanced_span(text, open_at)
-    body = text[open_at + 1:end - 1]
+    open_at = head.end() - 1
+    close = partner(text, open_at)
+    if close is None:
+        raise MatchRecognizeUnsupported("unbalanced parens in MATCH_RECOGNIZE")
+    end = close + 1
+    body = text[open_at + 1:close]
 
     # the table expression feeding MATCH_RECOGNIZE: the word before it
     src_m = re.search(r"\bfrom\s+(\w+)\s*$", text[:head.start()], re.I)
@@ -774,15 +697,15 @@ def translate_match_recognize(spark: SparkSession, text: str) -> DataFrame:
     if "pattern" not in clauses or "define" not in clauses:
         raise MatchRecognizeUnsupported("PATTERN and DEFINE are required")
 
-    part_cols = ([c.strip() for c in _split_top(clauses["partition by"])]
+    part_cols = ([c.strip() for c in
+                  split_depth0(clauses["partition by"], ",")]
                  if "partition by" in clauses else [])
     if "order by" not in clauses:
         raise MatchRecognizeUnsupported("ORDER BY is required")
-    order_cols = [re.sub(r"\s+(asc|desc)$", "", c.strip(), flags=re.I)
-                  for c in _split_top(clauses["order by"])]
-    for c in _split_top(clauses["order by"]):
-        if re.search(r"\bdesc\b", c, re.I):
-            raise MatchRecognizeUnsupported("DESC ordering in MR ORDER BY")
+    order_items = [c.strip() for c in split_depth0(clauses["order by"], ",")]
+    if any(re.search(r"\bdesc\b", c, re.I) for c in order_items):
+        raise MatchRecognizeUnsupported("DESC ordering in MR ORDER BY")
+    order_cols = [re.sub(r"\s+asc$", "", c, flags=re.I) for c in order_items]
 
     # PATTERN (...) — strip the outer parens, operator parses the rest
     pat_txt = clauses["pattern"].strip()
@@ -807,7 +730,7 @@ def translate_match_recognize(spark: SparkSession, text: str) -> DataFrame:
     subset = None
     if "subset" in clauses:
         subset = {}
-        for item in _split_top(clauses["subset"]):
+        for item in split_depth0(clauses["subset"], ","):
             sm = re.match(r"^(\w+)\s*=\s*\(([^)]*)\)$", item.strip())
             if not sm:
                 raise MatchRecognizeUnsupported(f"bad SUBSET item: {item!r}")
@@ -833,7 +756,7 @@ def translate_match_recognize(spark: SparkSession, text: str) -> DataFrame:
 
     # DEFINE
     define = {}
-    for item in _split_top(clauses["define"]):
+    for item in split_depth0(clauses["define"], ","):
         dm = re.match(r"^(\w+)\s+as\s+(.*)$", item.strip(), re.I | re.S)
         if not dm:
             raise MatchRecognizeUnsupported(f"bad DEFINE item: {item!r}")
@@ -849,7 +772,7 @@ def translate_match_recognize(spark: SparkSession, text: str) -> DataFrame:
     # MEASURES — (alias, python body, spark type)
     meas = []
     if "measures" in clauses:
-        for item in _split_top(clauses["measures"]):
+        for item in split_depth0(clauses["measures"], ","):
             mm = re.match(r"^(.*)\s+as\s+(\w+)$", item.strip(), re.I | re.S)
             if not mm:
                 raise MatchRecognizeUnsupported(

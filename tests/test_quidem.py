@@ -90,29 +90,19 @@ def _alias_select_items(query: str, collist: str) -> "str | None":
     …`` using the view's column alias list. Returns None (caller falls
     back to the native DDL) unless the query is a plain top-level
     SELECT whose item count matches the list."""
-    from drill_calcite_spark.sql import _split_depth0, _string_mask
+    from drill_calcite_spark.sqltext import depth0_matches, split_depth0
 
     m = re.match(r"(\s*select\s+)(.*)$", query, re.I | re.S)
     if not m:
         return None
     rest = m.group(2)
-    mask = _string_mask(rest)
-    depth, from_idx = 0, None
-    for i, ch in enumerate(rest):
-        if mask[i]:
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and rest[i:i + 5].lower() == "from " and (
-                i == 0 or not (rest[i - 1].isalnum() or rest[i - 1] == "_")):
-            from_idx = i
-            break
-    if from_idx is None:
+    frm = next(iter(depth0_matches(rest, re.compile(r"\bfrom ", re.I))),
+               None)
+    if frm is None:
         return None
-    items = [it.strip() for it in _split_depth0(rest[:from_idx])]
-    cols = [c.strip() for c in _split_depth0(collist)]
+    from_idx = frm.start()
+    items = [it.strip() for it in split_depth0(rest[:from_idx], ",")]
+    cols = [c.strip() for c in split_depth0(collist, ",")]
     if len(items) != len(cols):
         return None
     aliased = []

@@ -360,3 +360,29 @@ def test_literal_measures_first_disabled_block_shape(spark):
     rows = translate_match_recognize(spark, sql).collect()
     assert all((r.m1, r.m2, r.m3) == (1, 2.5, "x") for r in rows)
     assert len(rows) == 7
+
+
+_LITERAL_MR = """SELECT * FROM mr_literals MATCH_RECOGNIZE (
+  ORDER BY ts
+  MEASURES A.ts AS hit, {measure} AS tag
+  PATTERN (A)
+  DEFINE A AS A.sym = {literal})"""
+
+
+@pytest.mark.parametrize("literal, measure, expected", [
+    ("'x'", "'t'", [(3, "t")]),          # control
+    ("'a,b'", "'t'", [(1, "t")]),        # comma inside a DEFINE literal
+    ("')'", "'t'", [(2, "t")]),          # closer inside a DEFINE literal
+    ("'x'", "'p,q'", [(3, "p,q")]),      # comma inside a MEASURES literal
+])
+def test_literals_with_separators_and_brackets(spark, literal, measure,
+                                               expected):
+    """Commas and parens inside string literals are not clause
+    structure: the DEFINE/MEASURES lists split and the MATCH_RECOGNIZE
+    span closes exactly where they would without the literal."""
+    spark.createDataFrame(
+        [("a,b", 1), (")", 2), ("x", 3)], "sym string, ts int",
+    ).createOrReplaceTempView("mr_literals")
+    df = calcite_sql(spark, _LITERAL_MR.format(literal=literal,
+                                               measure=measure))
+    assert [(r.hit, r.tag) for r in df.collect()] == expected
